@@ -454,6 +454,16 @@ def test_simhash_kernel_matches_expression(spark, hash_texts):
     assert want[901] == 0 and want[900] is None  # fixture sanity
 
 
+def test_simhash_kernel_empty_batch():
+    """An empty Arrow batch yields an empty Int64 result, not an
+    IndexError from indexing with an empty float mask."""
+    import pandas as pd
+
+    from wine_label_ocr_spark.operators.dedupe import _simhash64_kernel
+    out = _simhash64_kernel(pd.Series([], dtype=object))
+    assert len(out) == 0 and out.dtype == "Int64"
+
+
 def test_minhash_kernel_bands(spark, hash_texts):
     from wine_label_ocr_spark.operators.dedupe import (lsh_bands,
                                                        minhash_lsh_pairs,

@@ -147,9 +147,97 @@ def test_resumable_run_executes_plan_once_per_bucket(spark, tmp_path):
     rr = ResumableRun(str(tmp_path / "out"), run_id="r1", n_buckets=4)
     rr.run(spark, pages, counting_plan)
     assert acc.value == N, f"plan executed {acc.value / N:.1f}x per row"
-    # metrics: n_pages is the distinct-url count, not a copy of n_records
+    # metrics: n_pages counts the bucket's input pages
     met = rr.metrics.read(spark)
     assert sum(r["n_pages"] for r in met.collect()) == N
+
+
+METRICS_SCHEMA_STR = ("struct<run_id:string,bucket:int,n_pages:bigint,"
+                      "n_records:bigint,n_with_vintage:bigint,"
+                      "n_bytes_text:bigint,wall_sec:double,"
+                      "committed_ts:timestamp>")
+
+
+def test_resumable_run_one_job_per_bucket(spark, tmp_path):
+    """Each bucket is ONE Spark job: the records append runs the plan and
+    observes every counter; the metrics row is written on the driver.
+    The observed counters equal an aggregate over the bucket's committed
+    files, and the metrics table keeps its exact schema."""
+    from pyspark.sql import functions as F
+    sc = spark.sparkContext
+    pages = pages_spark(spark, N, partitions=3)
+    rr = ResumableRun(str(tmp_path / "out"), run_id="r1", n_buckets=4)
+    group = "resumable-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        rr.run(spark, pages, extract_records)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+    met = rr.metrics.read(spark)
+    assert met.schema.simpleString() == METRICS_SCHEMA_STR
+    rows = {r["bucket"]: r for r in met.collect()}
+    assert sorted(rows) == [0, 1, 2, 3]
+    for snap in rr.records.snapshots():
+        b = snap["meta"]["bucket"]
+        want = spark.read.parquet(*snap["new_files"]).agg(
+            F.count("*").alias("n_records"),
+            F.count_distinct("url").alias("n_pages"),
+            F.count("vintage").alias("n_with_vintage"),
+            F.coalesce(F.sum(F.length("text")), F.lit(0))
+            .alias("n_bytes_text")).collect()[0]
+        for col in ("n_records", "n_pages", "n_with_vintage", "n_bytes_text"):
+            assert rows[b][col] == want[col], (b, col)
+    assert sum(r["n_pages"] for r in rows.values()) == N
+
+
+def test_resumable_run_counts_duplicate_url_pages(spark, tmp_path):
+    """n_pages counts input pages, so a url present twice counts twice."""
+    from pyspark.sql import functions as F
+    pages = pages_spark(spark, N, partitions=3)
+    dup = pages.orderBy("url").limit(1).collect()[0]["url"]
+    pages = pages.unionByName(pages.filter(F.col("url") == dup))
+    rr = ResumableRun(str(tmp_path / "out"), run_id="r1", n_buckets=3)
+    rr.run(spark, pages, extract_records)
+    rows = rr.metrics.read(spark).collect()
+    assert sum(r["n_pages"] for r in rows) == N + 1
+    rec = rr.records.read(spark)
+    dup_bucket = rec.filter(F.col("url") == dup).first()["bucket"]
+    for r in rows:
+        urls = rec.filter(F.col("bucket") == r["bucket"]).select("url")
+        assert r["n_pages"] == urls.distinct().count() + (
+            r["bucket"] == dup_bucket)
+
+
+def test_metrics_table_mixed_writers_schema(spark, tmp_path):
+    """A metrics table holding a row written by Spark (as runs started by
+    an older version wrote it) and a row written by the driver-side
+    pyarrow path reads back with the one metrics schema."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from wine_label_ocr_spark.plans.resumable import METRICS_SCHEMA
+    t = ManifestTable(str(tmp_path / "metrics"))
+    t.append(spark.createDataFrame(
+        [("r1", 0, 5, 5, 3, 100, 1.5)],
+        "run_id string, bucket int, n_pages bigint, n_records bigint, "
+        "n_with_vintage bigint, n_bytes_text bigint, wall_sec double"
+    ).withColumn("committed_ts", F.current_timestamp()))
+    t.append(pa.Table.from_pylist(
+        [{"run_id": "r1", "bucket": 1, "n_pages": 7, "n_records": 7,
+          "n_with_vintage": 2, "n_bytes_text": 70, "wall_sec": 0.5,
+          "committed_ts": datetime.now(timezone.utc)}],
+        schema=METRICS_SCHEMA))
+    met = t.read(spark)
+    assert met.schema.simpleString() == METRICS_SCHEMA_STR
+    rows = sorted(met.collect(), key=lambda r: r["bucket"])
+    assert [(r["bucket"], r["n_pages"], r["n_bytes_text"]) for r in rows] == \
+        [(0, 5, 100), (1, 7, 70)]
+    assert all(r["committed_ts"] is not None for r in rows)
 
 
 def test_rollback_unmarked_bucket(spark, tmp_path):

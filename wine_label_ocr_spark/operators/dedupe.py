@@ -708,9 +708,6 @@ def incremental_dedup(new_docs: DataFrame, prior_fps: DataFrame,
     return fresh.join(dup_ids, id_col, "left_anti")
 
 
-_JAVA_WS_SPLIT = None  # compiled lazily inside the worker
-
-
 def _simhash64_kernel(texts):
     """Batch SimHash (xxhash64 flavor) — bit-identical to the expression
     form below, computed vectorized: one bucketed XXH64 pass over every
@@ -750,7 +747,7 @@ def _simhash64_kernel(texts):
         out = np.packbits(pos, axis=1,
                           bitorder="little").view("<u8").ravel().view(np.int64)
     res = pd.array(out, dtype="Int64")
-    res[np.asarray(null_mask)] = None
+    res[np.asarray(null_mask, dtype=bool)] = None
     return pd.Series(res)
 
 

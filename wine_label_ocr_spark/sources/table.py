@@ -21,6 +21,8 @@ implements the same commit semantics on plain parquet:
   file-stats pruning analog.
 
 Only the manifest swap is driver-side; all data moves stay distributed.
+The one exception is a caller's few-row ``pyarrow.Table`` (a metrics
+row), which the driver writes itself rather than start a Spark job.
 The manifest also records per-commit row counts and lineage metadata
 (run id, bucket), which doubles as the resume/metrics journal.
 """
@@ -33,6 +35,8 @@ import time
 import uuid
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -112,14 +116,17 @@ class ManifestTable:
 
     # -- write -------------------------------------------------------------
 
-    def _write_files(self, df: DataFrame,
+    def _write_files(self, df: DataFrame | pa.Table,
                      partition_by: list[str] | None = None
                      ) -> tuple[list[str], int]:
         out = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex}")
-        w = df.write.mode("errorifexists")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(out)
+        if isinstance(df, pa.Table):
+            pq.write_to_dataset(df, out, partition_cols=partition_by)
+        else:
+            w = df.write.mode("errorifexists")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(out)
         files = sorted(
             os.path.join(root, f)
             for root, _, names in os.walk(out)
@@ -151,7 +158,6 @@ class ManifestTable:
         statistics (pyarrow metadata read — no data pages touched). Files
         whose stats are absent or not JSON-serializable are omitted, which
         read() treats as \"always keep\" (pruning stays safe)."""
-        import pyarrow.parquet as pq
         out: dict[str, list] = {}
         for p in files:
             try:
@@ -190,10 +196,15 @@ class ManifestTable:
         stats.update(self._file_stats(new_files, col))
         return col, stats
 
-    def append(self, df: DataFrame, meta: dict[str, Any] | None = None,
+    def append(self, df: DataFrame | pa.Table,
+               meta: dict[str, Any] | None = None,
                stats_col: str | None = None,
                partition_by: list[str] | None = None) -> int:
         """Write df's files, then commit prev ∪ new as a new snapshot (S3).
+
+        ``df`` is a Spark DataFrame, or a driver-side ``pyarrow.Table``
+        that pyarrow writes without starting a Spark job; both commit the
+        same way.
 
         ``stats_col`` (sticky across commits once set) records per-file
         min/max for that column, enabling pruned reads. ``partition_by``
